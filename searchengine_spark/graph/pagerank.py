@@ -10,12 +10,13 @@ Semantics pinned to the reference variant (lib/pagerank.py:8-51):
  - converged when ALL |new - old| < tol; the post-update vector is kept
  - damping=0.85, max_iter=25, tol=1e-6 (params.py)
 
-Scale: per iteration one join + one shuffle agg over edges; lineage is
-truncated every iteration via localCheckpoint so 25 iterations don't
-build a 25-deep plan (SURVEY.md G1).
+Scale: per iteration one join + one shuffle agg over edges and ONE Spark
+job — the localCheckpoint that truncates lineage (so 25 iterations don't
+build a 25-deep plan, SURVEY.md G1) also yields the convergence delta as
+an Observation metric.
 """
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..params import PR_DAMPING, PR_MAX_ITER, PR_TOL
@@ -48,9 +49,9 @@ def pagerank_df(
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     e = edges.join(outdeg, "src").persist()
 
-    ranks = universe.select(
-        "docid", F.lit(1.0 / n_total).alias("rank")
-    ).localCheckpoint()
+    # the initial vector stays a lazy projection: the first iteration's
+    # checkpoint job computes it in passing
+    ranks = universe.select("docid", F.lit(1.0 / n_total).alias("rank"))
 
     for _ in range(max_iter):
         contribs = (
@@ -64,23 +65,23 @@ def pagerank_df(
         )
         if round_to is not None:
             rank_expr = F.round(rank_expr, round_to)
-        new = (
-            universe.join(
-                contribs.withColumnRenamed("dst", "docid"), "docid", "left"
-            )
-            .select("docid", rank_expr.alias("rank"))
-            .localCheckpoint()
-        )
+        # the old vector spans the whole universe, so it is the left
+        # side of the update and carries each doc's previous rank along
+        step = ranks.withColumnRenamed("rank", "old").join(
+            contribs.withColumnRenamed("dst", "docid"), "docid", "left"
+        ).select("docid", rank_expr.alias("rank"), "old")
+        obs = None
         if tol > 0:
-            delta = (
-                new.join(ranks.withColumnRenamed("rank", "old"), "docid")
-                .agg(F.max(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .first()["d"]
+            # max |new - old| rides the checkpoint job as an Observation
+            # metric — no separate delta job per iteration
+            obs = Observation()
+            step = step.observe(
+                obs, F.max(F.abs(F.col("rank") - F.col("old"))).alias("d")
             )
-            ranks = new
+        ranks = step.select("docid", "rank").localCheckpoint()
+        if obs is not None:
+            delta = obs.get["d"]
             if delta is not None and delta < tol:
                 break
-        else:
-            ranks = new
     e.unpersist()
     return ranks.withColumnRenamed("rank", "pr_quality")

@@ -429,8 +429,8 @@ def load_segments(spark: SparkSession, index_dir: str,
 
 
 CORR_RANGE = 4096  # docid range-bucket width for the distributed prune
+                  # (the stored-fields sidecar's range_id granularity)
 CORR_SPAN_CAP = 64  # widest block (in buckets) still pruned by explode
-                   # (the stored-fields sidecar's range_id granularity)
 
 
 def _tombstone_corrections(spark: SparkSession, blocks: DataFrame,

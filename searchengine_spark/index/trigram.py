@@ -46,6 +46,7 @@ parquet (plan-asserted in tests/test_ops.py).
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -218,18 +219,21 @@ def delete_trigram(spark: SparkSession, index_dir: str,
         fresh = fresh.join(dead, "doc_id", "left_anti")
     tombs = manifest.get("tombstones", [])
     gen = f"tombs_t{len(tombs)}"
+    gdir = os.path.join(index_dir, gen)
     # overwrite on the not-yet-listed dir: a crashed commit's rerun
     # lands on the same name (the _commit_tombstones precedent)
-    fresh.write.mode("overwrite").parquet(os.path.join(index_dir, gen))
-    n_new = int(
-        spark.read.parquet(os.path.join(index_dir, gen)).count()
-    )
-    if n_new:
-        manifest["tombstones"] = tombs + [gen]
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
+    fresh.write.mode("overwrite").parquet(gdir)
+    n_new = int(spark.read.parquet(gdir).count())
+    if not n_new:
+        # an all-already-dead replay commits nothing: its empty dir is
+        # never listed, so no later compaction would reclaim it
+        shutil.rmtree(gdir, ignore_errors=True)
+        return 0
+    manifest["tombstones"] = tombs + [gen]
+    tmp = mpath + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, mpath)
     return n_new
 
 
@@ -255,7 +259,6 @@ def compact_trigram(spark: SparkSession, index_dir: str) -> int:
 
     :return: number of tombstoned docs physically reclaimed.
     """
-    import shutil
     from functools import reduce
 
     mpath = os.path.join(index_dir, MANIFEST)

@@ -16,9 +16,13 @@ wand_topk; latency-sensitive front-ends run LocalSearcher replicas
 against the same index files (parquet on shared storage) — the index
 is the contract, not the process.  Loaded state is the same as the
 reference's: term dictionary + doc lengths in RAM (both columnar
-reads), block payloads fetched per query with bucket-directory pruning
-(pure-Python Spark-compatible xxhash64) + parquet row-group min/max
-pruning on ``term``, behind a per-term LRU.
+reads) plus a per-segment seek table (_SeekTable, the reference's
+in-RAM seek dict): which files of the term's bucket (pure-Python
+Spark-compatible xxhash64) hold each term, at which rows, and each
+file's row-group boundaries from the parquet footer.  A term miss in
+the per-term LRU opens only those files and reads only the row groups
+holding the term's rows — a point read, not a dataset scan; no file
+handle stays open between queries.
 
 Beyond WAND/blended top-k, the stored-positions surfaces are served
 here too: ``phrase_topk`` (exact phrase, the semantics of
@@ -35,7 +39,8 @@ rescaling by max(1, avgdl_serve/avgdl_build).
 
 Scale envelope (stated, not hidden): a replica holds the term
 dictionary and per-doc (length, qualities) arrays in RAM — ~40 B/doc
-and ~50 B/term, i.e. tens of GB per 10⁹ docs — the same residency
+and ~50 B/term, plus ~12 B per (term, file) pair of seek table,
+i.e. tens of GB per 10⁹ docs — the same residency
 model as the reference's seek-dict + docinfo load, which this tier
 re-expresses.  Posting blocks do NOT load up front (pyarrow fetch +
 LRU), so the block store can be arbitrarily large; the positions
@@ -52,6 +57,7 @@ from __future__ import annotations
 
 import json
 import os
+from bisect import bisect_left, bisect_right
 from collections import OrderedDict
 
 import numpy as np
@@ -80,6 +86,135 @@ from ..params import N_TERM_BUCKETS
 from ..text.querylang import parse_query
 from .prune import analyze_query
 from .wand import bm25_idf, bmw_or_range, bmw_range
+
+
+def _file_stamp(path: str):
+    """(mtime_ns, size, inode) of ``path``, or None when it is absent."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+class _SeekTable:
+    """One segment's in-RAM seek state over its ``postings/`` files —
+    the columnar twin of the reference's seek dictionary
+    (lib/reader.py:229-259), built once per segment load from each
+    file's footer and ``term`` column.
+
+    ``files`` are the segment's parquet files, ``buckets[f]`` the
+    ``bucket=B`` hive directory file ``f`` sits in (-1 when its path
+    names none) and ``rg_rows[f]`` its row groups' first-row offsets
+    plus its row count, from the footer.  The term index lists every
+    run of equal ``term`` values in a file as ``(hash(term), file,
+    first row, row count)``, sorted by hash.  A term whose postings fit
+    one salt stripe is one run in one file of its bucket; a salted hot
+    term is one run in each of several.  A read opens only the files a
+    term's runs name, reads only the row groups that hold those rows and
+    slices the run out: no row filter, no footer statistics needed.
+    Two terms sharing a hash cost an extra read, never a wrong answer:
+    a run is kept only when its first row holds the queried term.
+
+    No file handle or parquet metadata object outlives a call.
+    Segment directories are immutable, so the table stays valid while
+    ``stamp`` (the segment's mergeinfo.json stat) does."""
+
+    __slots__ = ("stamp", "files", "buckets", "rg_rows",
+                 "hashes", "fids", "starts", "counts")
+
+    def __init__(self, seg_dir: str, stamp):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        self.stamp = stamp
+        root = os.path.join(seg_dir, "postings")
+        found = []
+        # the file set pyarrow.dataset discovers: hidden ('.' — Spark's
+        # .crc sidecars) and underscore ('_SUCCESS') entries skipped
+        for dirpath, dirnames, filenames in os.walk(root):
+            dirnames[:] = sorted(
+                d for d in dirnames if not d.startswith((".", "_"))
+            )
+            bucket = -1
+            for part in os.path.relpath(dirpath, root).split(os.sep):
+                if part.startswith("bucket="):
+                    bucket = int(part[len("bucket="):])
+            found.extend(
+                (bucket, os.path.join(dirpath, fn))
+                for fn in sorted(filenames)
+                if not fn.startswith((".", "_"))
+            )
+        self.files = [p for _b, p in found]
+        self.buckets = [b for b, _p in found]
+        self.rg_rows = []
+        cols = []
+        for path in self.files:
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+                rows = [0]
+                for r in range(md.num_row_groups):
+                    rows.append(rows[-1] + md.row_group(r).num_rows)
+                cols.extend(pf.read(columns=["term"]).column("term").chunks)
+            self.rg_rows.append(tuple(rows))
+        # runs of equal terms, found over all files in one vectorized
+        # pass: a run also ends where its file does
+        terms = pa.concat_arrays(cols) if cols else pa.array([], pa.string())
+        n_rows = np.array([r[-1] for r in self.rg_rows], dtype=np.int64)
+        file_at = np.repeat(np.arange(n_rows.size), n_rows)
+        cut = np.ones(len(terms), dtype=bool)
+        if len(terms) > 1:
+            cut[1:] = (
+                pc.not_equal(terms[1:], terms[:-1])
+                .to_numpy(zero_copy_only=False)
+                | (file_at[1:] != file_at[:-1])
+            )
+        first = np.flatnonzero(cut)
+        h = np.fromiter((hash(t) for t in terms.take(first).to_pylist()),
+                        dtype=np.int64, count=first.size)
+        order = np.argsort(h, kind="stable")
+        self.hashes = h[order]
+        fids = file_at[first]
+        file_start = np.cumsum(n_rows) - n_rows
+
+        def packed(a):
+            # the narrowest unsigned dtype holding the column (a file id
+            # or a run's rows rarely need more than a byte or two)
+            a = a[order]
+            return a.astype(np.min_scalar_type(int(a.max(initial=0))))
+
+        self.fids = packed(fids)
+        self.starts = packed(first - file_start[fids])
+        self.counts = packed(np.diff(first, append=file_at.size))
+
+    def read(self, term: str, bucket: int, columns) -> list:
+        """The term's block rows as pyarrow tables (``columns`` plus
+        ``term``), one per run that holds it; [] when the segment
+        lacks the term."""
+        import pyarrow.parquet as pq
+
+        h = hash(term)
+        lo = int(self.hashes.searchsorted(h, "left"))
+        hi = int(self.hashes.searchsorted(h, "right"))
+        out = []
+        for i in range(lo, hi):
+            fid = int(self.fids[i])
+            if self.buckets[fid] not in (bucket, -1):
+                continue  # a hash shared with another bucket's term
+            start, count = int(self.starts[i]), int(self.counts[i])
+            rows = self.rg_rows[fid]
+            first = bisect_right(rows, start) - 1
+            last = bisect_left(rows, start + count)
+            with pq.ParquetFile(self.files[fid]) as pf:
+                t = pf.read_row_groups(
+                    range(first, last), columns=["term", *columns],
+                    use_threads=False,
+                )
+            t = t.slice(start - rows[first], count)
+            if t.column("term")[0].as_py() == term:
+                out.append(t)
+        return out
 
 
 class LocalSearcher:
@@ -115,7 +250,6 @@ class LocalSearcher:
                  cache_terms: int = 256,
                  segments: list[str] | None = None,
                  positions_cache_bytes: int = 64 << 20):
-        import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
         self.index_dir = index_dir
@@ -213,19 +347,26 @@ class LocalSearcher:
 
             self._imp_table = np.asarray(IMPORTANCE, dtype=np.float64)
 
-        # ---- per-segment block datasets + avgdl-drift max_weight factor
-        # (served subset only; the factor still uses the GLOBAL avgdl)
+        # ---- per-segment seek tables + avgdl-drift max_weight factor
+        # (served subset only; the factor still uses the GLOBAL avgdl).
+        # refresh() re-runs __init__ on this object: generation dirs are
+        # immutable, so a segment still served keeps its table while its
+        # mergeinfo.json is unchanged; a plain index dir can be
+        # rewritten in place and is always re-read
+        reuse = getattr(self, "_seek_tables", {}) if meta else {}
         stats_by_dir = dict(zip(seg_dirs, seg_stats))
         self._serve_dirs = list(serve_dirs)
+        self._seek_tables = {}
         self._segments = []
         for d in serve_dirs:
             build_avgdl = stats_by_dir[d]["avgdl"] or 1.0
             factor = max(1.0, self.avgdl / build_avgdl)
-            dset = pads.dataset(
-                os.path.join(d, "postings"), format="parquet",
-                partitioning="hive",
-            )
-            self._segments.append((dset, factor))
+            stamp = _file_stamp(os.path.join(d, "mergeinfo.json"))
+            seek = reuse.get(d)
+            if seek is None or seek.stamp != stamp:
+                seek = _SeekTable(d, stamp)
+            self._seek_tables[d] = seek
+            self._segments.append((seek, factor))
 
         # ---- doc lengths + quality columns, tombstones removed
         qual_cols = ("pr_quality", "hub_quality", "auth_quality")
@@ -359,13 +500,12 @@ class LocalSearcher:
                       positions_cache_bytes=self._pos_budget)
 
     def _commit_stamp(self):
-        """(mtime_ns, size) of the commit point: segments.json for a
+        """(mtime_ns, size, inode) of the commit point: segments.json for a
         generations dir, mergeinfo.json for a single index."""
         for name in ("segments.json", "mergeinfo.json"):
-            p = os.path.join(self.index_dir, name)
-            if os.path.exists(p):
-                st = os.stat(p)
-                return (st.st_mtime_ns, st.st_size)
+            stamp = _file_stamp(os.path.join(self.index_dir, name))
+            if stamp is not None:
+                return stamp
         return None
 
     def maybe_refresh(self) -> bool:
@@ -378,30 +518,35 @@ class LocalSearcher:
         self.refresh()
         return True
 
+    def _term_tables(self, term: str, columns) -> list:
+        """[(factor, table)] — the term's block rows (``columns`` only)
+        in each served segment, read through the segments' seek tables
+        (_SeekTable): only the files of the term's bucket that hold it,
+        only the row groups holding its rows."""
+        bucket = term_bucket(term, self._n_buckets)
+        return [(factor, t)
+                for seek, factor in self._segments
+                for t in seek.read(term, bucket, columns)]
+
     def _blocks_for(self, term: str) -> list:
         """Block tuples (d1, d2, max_weight, (ids, tfs)) for one term,
-        ascending by docid span; bucket-dir + row-group pruned reads.
+        ascending by docid span, read through the seek tables
+        (_term_tables — no dataset scan, no bucket listing per miss).
         Payloads are varbyte-DECODED on first fetch and the decoded
         arrays live in the LRU (the reference caches decoded postings,
         lib/reader.py:229-259) — repeat queries on a hot term skip the
-        decode entirely (the WAND kernels accept either form)."""
-        import pyarrow.dataset as pads
-
+        read and the decode entirely (the WAND kernels accept either
+        form)."""
         from ..index.varbyte import decode_block_np
 
         hit = self._blocks_lru.get(term)
         if hit is not None:
             self._blocks_lru.move_to_end(term)
             return hit
-        bucket = term_bucket(term, self._n_buckets)
         out = []
-        for dset, factor in self._segments:
-            t = dset.to_table(
-                filter=(pads.field("bucket") == bucket)
-                & (pads.field("term") == term),
-                columns=["docid_first", "docid_last", "max_weight",
-                         "payload"],
-            )
+        for factor, t in self._term_tables(
+            term, ("docid_first", "docid_last", "max_weight", "payload")
+        ):
             for d1, d2, mw, payload in zip(
                 t.column("docid_first").to_pylist(),
                 t.column("docid_last").to_pylist(),
@@ -430,27 +575,22 @@ class LocalSearcher:
         the served segments, docid-ascending and tombstone-masked —
         positions of docid j are ``flat[off[j]:off[j+1]]``.
 
-        The positions-consuming twin of _blocks_for, behind its own LRU:
-        the WAND hot path decodes ``want_positions=False`` and must not
-        pay the position section, while phrase/proximity need exactly
-        that section (the payload layout stores it last so either
-        decode is one pass, index/varbyte.py)."""
-        import pyarrow.dataset as pads
-
+        The positions-consuming twin of _blocks_for — the same seek-
+        table reads (_term_tables) behind its own LRU: the WAND hot path
+        decodes ``want_positions=False`` and must not pay the position
+        section, while phrase/proximity need exactly that section (the
+        payload layout stores it last so either decode is one pass,
+        index/varbyte.py)."""
         from ..index.varbyte import decode_block_np
 
         hit = self._pos_lru.get(term)
         if hit is not None:
             self._pos_lru.move_to_end(term)
             return hit
-        bucket = term_bucket(term, self._n_buckets)
         parts = []
-        for dset, _factor in self._segments:
-            t = dset.to_table(
-                filter=(pads.field("bucket") == bucket)
-                & (pads.field("term") == term),
-                columns=["docid_first", "payload"],
-            )
+        for _factor, t in self._term_tables(
+            term, ("docid_first", "payload")
+        ):
             for d1, payload in zip(
                 t.column("docid_first").to_pylist(),
                 t.column("payload").to_pylist(),

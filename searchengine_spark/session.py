@@ -4,6 +4,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the searchengine_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath() -> str:
+    """PYTHONPATH with the package root first, for Spark's Python
+    workers: a process that found the package through an edited
+    ``sys.path`` (not the environment) would otherwise start workers
+    that cannot import it."""
+    parts = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+             if p and p != PACKAGE_ROOT]
+    return os.pathsep.join([PACKAGE_ROOT, *parts])
+
 
 def get_spark(app="searchengine-spark", master=None, shuffle_partitions=None):
     """Build a SparkSession with AQE + Arrow enabled.
@@ -11,14 +24,23 @@ def get_spark(app="searchengine-spark", master=None, shuffle_partitions=None):
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract);
     on a real cluster this is supplied by spark-submit and the builder's
     master is simply not set.
+
+    The package root goes on the Python workers' path twice over: in
+    this process's PYTHONPATH before the JVM starts (the JVM and the
+    workers it forks inherit it) and as ``spark.executorEnv.PYTHONPATH``,
+    which Spark merges into every Python worker's path.  Once a JVM is
+    running, getOrCreate returns its session and neither takes effect.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
+    pythonpath = _worker_pythonpath()
+    os.environ["PYTHONPATH"] = pythonpath
     b = (
         SparkSession.builder.appName(app)
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -3211,7 +3211,8 @@ def test_trigram_liveness_all_tiers(spark, tmp_path):
     EVERY tier — the Spark ondisk ops (pruned and full-scan paths),
     LocalGrep (stale replica via maybe_refresh), and ShardedGrep —
     with survivors exactly equal to a rebuild over the live set, and
-    idempotent replays committing nothing."""
+    idempotent replays committing nothing (not even an uncommitted
+    tombstone dir)."""
     import json
     import os
 
@@ -3251,6 +3252,9 @@ def test_trigram_liveness_all_tiers(spark, tmp_path):
     assert delete_trigram(spark, d, doc_ids=dead) == 0
     man2 = json.load(open(os.path.join(d, "trigram_index.json")))
     assert man2["tombstones"] == man["tombstones"]
+    # ...and no uncommitted tombs_t<N> dir left behind by the replay
+    assert sorted(n for n in os.listdir(d)
+                  if n.startswith("tombs_t")) == man["tombstones"]
 
     # ground truth: a fresh build over the survivor set
     live = docs.join(

@@ -563,6 +563,7 @@ def test_local_searcher_refresh_on_append(spark, split_corpora,
         spark, build_tables(spark, a, compute_quality=False), seg_dir
     )
     ls = LocalSearcher(seg_dir, stem=True)
+    (seg0, seek0), = ls._seek_tables.items()
     n0 = ls.n_survivors
     assert ls.maybe_refresh() is False  # nothing committed
 
@@ -587,6 +588,9 @@ def test_local_searcher_refresh_on_append(spark, split_corpora,
     assert ls.suffix_topk(marker_suffix) == []
     assert ls.maybe_refresh() is True
     assert ls.n_survivors > n0
+    # the unchanged generation keeps its seek table; the new one gets one
+    assert len(ls._seek_tables) == 2
+    assert ls._seek_tables[seg0] is seek0
     hits = ls.topk("qqlivemarker", mode="or")
     assert len(hits) == 1
     # refresh must invalidate the lazy views, not just the termdict
@@ -677,12 +681,16 @@ def test_local_serving_over_compacted_segments(spark, split_corpora,
 
     # physical merge: the replica refreshes onto the single merged
     # generation and keeps answering identically
+    import os
+
     from searchengine_spark.index.segments import merge_segments
 
     pre = {qid: local.topk(q, k=10) for qid, q in queries}
     pre_phrase = local.phrase_topk(live_phrase, k=50)
-    merge_segments(spark, seg_dir)
+    merged = merge_segments(spark, seg_dir)
     assert local.maybe_refresh() is True
+    # only the merged generation's seek table is left
+    assert list(local._seek_tables) == [os.path.join(seg_dir, merged)]
     for qid, q in queries:
         got = local.topk(q, k=10)
         assert [(r, d) for r, d, _ in got] == [
@@ -1596,3 +1604,165 @@ def test_count_matches_python_recompute(spark, index_dir, searcher,
                 )
             got = searcher.count(q, mode=mode)
             assert got == want, (q, mode, got, want)
+
+
+# -- seek-table point reads (_SeekTable) ---------------------------------
+
+def _answers(ls, phrases):
+    """Every miss-path surface over QUERIES plus ``phrases``: AND/OR
+    topk, blended_topk and phrase_topk."""
+    out = {}
+    for qid, q in QUERIES:
+        out[("and", qid)] = ls.topk(q, k=10)
+        out[("or", qid)] = ls.topk(q, k=10, mode="or")
+        out[("blended", qid)] = ls.blended_topk(q, k=10)
+    for i, ph in enumerate(phrases):
+        out[("phrase", i)] = ls.phrase_topk(ph, k=50, analyzer=_ident)
+    return out
+
+
+def _phrases(oracle):
+    pm = _pos_term_map(oracle)
+    out = []
+    for d in sorted(pm)[:20]:
+        if {1, 2, 3} <= set(pm[d]):
+            out += [[pm[d][1], pm[d][2]], [pm[d][1], pm[d][2], pm[d][3]]]
+    return out
+
+
+def _assert_seek_reads_match_scan(ls, index_dir):
+    """Block rows read through the seek table equal, term by term, a
+    full independent scan of the postings files."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    cols = ["docid_first", "docid_last", "max_weight", "payload"]
+    want = {}
+    for f in glob.glob(os.path.join(index_dir, "postings", "**",
+                                    "*.parquet"), recursive=True):
+        t = pq.ParquetFile(f).read(columns=["term", *cols])
+        for row in zip(*(t.column(c).to_pylist() for c in ["term", *cols])):
+            want.setdefault(row[0], []).append(row[1:])
+    assert want
+    for term, rows in want.items():
+        got = [
+            row
+            for _factor, t in ls._term_tables(term, cols)
+            for row in zip(*(t.column(c).to_pylist() for c in cols))
+        ]
+        assert sorted(got) == sorted(rows), term
+    assert all(t.read("zzz-absent-term", b, cols) == []
+               for t, _f in ls._segments for b in range(-1, 64))
+
+
+def _rewrite_postings(src, dst, **write_kwargs):
+    """Copy an index dir, rewriting every postings file with pyarrow
+    (same rows, same order) under ``write_kwargs``."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.copytree(src, dst)
+    for f in glob.glob(os.path.join(dst, "postings", "**", "*.parquet"),
+                       recursive=True):
+        t = pq.ParquetFile(f).read()
+        pq.write_table(t, f, **write_kwargs)
+
+
+@pytest.fixture(scope="module")
+def striped_index(spark, tables, tmp_path_factory):
+    """The session corpus written with a tiny salt stripe: every term
+    over 8 postings is salted into several stripes, which hash to
+    several files of the term's bucket."""
+    from searchengine_spark.index import shards
+
+    d = str(tmp_path_factory.mktemp("striped") / "idx")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shards, "STRIPE_POSTINGS", 8)
+        shards.write_index(spark, tables, d)
+    return d
+
+
+def test_seek_reads_span_several_files(striped_index, searcher, oracle):
+    """Terms whose blocks span several files of their bucket: every
+    surface answers exactly as over the standard layout."""
+    ls = LocalSearcher(striped_index, stem=True)
+    (seek, _factor), = ls._segments
+    per_term = {}
+    for h, f in zip(seek.hashes.tolist(), seek.fids.tolist()):
+        per_term.setdefault(h, set()).add(f)
+    assert max(len(fs) for fs in per_term.values()) > 1
+    _assert_seek_reads_match_scan(ls, striped_index)
+    phrases = _phrases(oracle)
+    assert phrases
+    assert _answers(ls, phrases) == _answers(searcher, phrases)
+
+
+@pytest.mark.parametrize("stats", [True, False])
+def test_seek_reads_over_row_groups(index_dir, searcher, oracle, tmp_path,
+                                    stats):
+    """Postings files cut into several row groups, with and without
+    term statistics in the footer (a row group without them may hold
+    any term): answers equal the single-row-group index's."""
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+    _rewrite_postings(index_dir, d, row_group_size=3,
+                      write_statistics=stats)
+    ls = LocalSearcher(d, stem=True)
+    (seek, _factor), = ls._segments
+    assert max(len(r) for r in seek.rg_rows) > 3  # >= 3 row groups
+    md = pq.ParquetFile(seek.files[0]).metadata
+    col = md.schema.names.index("term")
+    assert md.row_group(0).column(col).is_stats_set is stats
+    _assert_seek_reads_match_scan(ls, d)
+    phrases = _phrases(oracle)
+    assert _answers(ls, phrases) == _answers(searcher, phrases)
+
+
+def test_refresh_rereads_plain_index_rewritten_in_place(
+        index_dir, striped_index, tmp_path):
+    """A plain index dir can be rewritten in place: refresh() builds a
+    new seek table (the old one names files that no longer exist)."""
+    import shutil
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(index_dir, d)
+    ls = LocalSearcher(d, stem=True)
+    old = ls._seek_tables[d]
+    shutil.rmtree(d)
+    shutil.copytree(striped_index, d)
+    ls.refresh()
+    assert ls._seek_tables[d] is not old
+    assert ls._seek_tables[d].hashes.size > old.hashes.size
+    want = LocalSearcher(striped_index, stem=True)
+    assert _answers(ls, []) == _answers(want, [])
+
+
+def test_no_open_files_between_calls(index_dir):
+    """No file handle outlives a call: the process's open fd count is
+    flat across 20 refreshes and 500 term misses.  The seek state
+    stays small: at most 16 bytes per (term, file) run."""
+    import os
+
+    ls = LocalSearcher(index_dir, stem=True, cache_terms=2)
+    terms = sorted(ls._df)[:500]
+    assert len(terms) == 500
+    ls._blocks_for(terms[0])
+    ls._postings_for(terms[0])
+    fds = len(os.listdir("/proc/self/fd"))
+    for _ in range(20):
+        ls.refresh()
+    for t in terms:
+        assert ls._blocks_for(t)
+    for t in terms[:50]:
+        ls._postings_for(t)
+    assert len(os.listdir("/proc/self/fd")) == fds
+    (seek, _factor), = ls._segments
+    nbytes = sum(a.nbytes for a in (seek.hashes, seek.fids, seek.starts,
+                                    seek.counts))
+    assert nbytes <= 16 * seek.hashes.size
